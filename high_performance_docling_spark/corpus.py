@@ -96,7 +96,8 @@ class GenConfig:
     # "xycut" = recursive XY-cut. The generator validates two-column
     # layouts against BOTH so either mode round-trips exactly.
     reading_order_mode: str = "rb"
-    # Layout-detection model for the staged path: "synth" replays
+    # Layout-detection model of the checkpointed page-grain path
+    # (detect_stage; the doc-grain path always runs synth): "synth" replays
     # ground-truth boxes + recoverable noise; "conv" runs the real-math
     # conv detector (kernels/toy_models.ConvLayoutDetector) — a genuine
     # float32-NCHW forward whose post-process recovers boxes to ~1e-6 pt

@@ -109,8 +109,9 @@ def _detect_batch(
     items: list[tuple[str, TypesetPage]], cfg: GenConfig
 ) -> list[list[dict]]:
     """Layout detection through the model harness (same executor-local
-    singleton + fixed 32-page batches as the staged detect_stage), so the
-    fused path exercises the identical model seam."""
+    singleton + fixed 32-page batches as the page-grain detect_stage), so
+    the doc-grain path exercises the identical model seam. Always the
+    synth detector: ``cfg.detector`` is read only by detect_stage."""
     from ..operators.model_harness import FixedBatcher, ModelSpec
     from ..operators.stages import SynthLayoutDetector
 
@@ -129,9 +130,9 @@ def process_page_batch(
     timers: dict[str, float] | None = None,
 ) -> list[list[dict]]:
     """Layout postprocess each page, then OCR fill, then table structure —
-    layout, OCR and table model batches all form across the whole batch
-    (which may mix documents, as the Spark stage's Arrow batches do),
-    each through the executor-local harness singleton.
+    layout, OCR and table model batches all form across the pages of
+    ``items`` (one document's pages on the doc-grain path), each through
+    the executor-local harness singleton.
 
     ``timers`` (optional) accumulates per-phase wall ms under the
     reference's timer field names (gpu_processor.py:102-129 layout
@@ -166,8 +167,9 @@ def process_page_batch(
 
 def process_parsed_batch(rows: list[dict], cfg: GenConfig) -> list[list[dict]]:
     """Same as process_page_batch but from already-parsed page rows
-    (doc_id, page_no, width, height, cells, detections) — the staged
-    checkpointed path, where detections were materialized by S1/S2."""
+    (doc_id, page_no, width, height, cells, detections) — the
+    checkpointed page-grain path, where detections were materialized by
+    S1/S2."""
     page_clusters = [
         postprocess_page(
             row["width"], row["height"], row["cells"], row["detections"],

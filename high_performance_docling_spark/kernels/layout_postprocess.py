@@ -62,6 +62,13 @@ from .spatial_index import GRID_CUTOVER as _GRID_CUTOVER
 
 _MAXIDX = sys.maxsize
 
+# Predictor-side postfilter (layout_predictor_gpu.py:303-312): drop
+# detections below the base threshold or with a blacklisted label, before
+# the per-label thresholds. postfilter_detections and the same filter
+# fused into postprocess_page's cluster build both read these.
+_BASE_THRESHOLD = 0.3
+_BLACKLIST: frozenset[str] = frozenset()
+
 
 def _box(c: dict[str, Any]) -> tuple[float, float, float, float]:
     return (c["l"], c["t"], c["r"], c["b"])
@@ -142,13 +149,13 @@ def postfilter_detections(
     dets: list[dict],
     page_w: float,
     page_h: float,
-    base_threshold: float = 0.3,
-    blacklist: frozenset[str] = frozenset(),
+    base_threshold: float = _BASE_THRESHOLD,
+    blacklist: frozenset[str] = _BLACKLIST,
 ) -> list[dict]:
     """Raw-detector output filter (layout_predictor_gpu.py:303-312, the
     predict_batch tail): drop blacklisted classes (e.g. {"Form",
     "Key-Value Region"} — layout_predictor.py:53), drop scores below the
-    base threshold (:base_threshold=0.3 default), clamp every bbox to the
+    base threshold (_BASE_THRESHOLD by default), clamp every bbox to the
     page (l,t >= 0; r <= w; b <= h). Runs BEFORE the per-label confidence
     thresholds of the post-processor. Idempotent."""
     out: list[dict] = []
@@ -497,14 +504,14 @@ def postprocess_page(
     # predictor-side postfilter (base threshold + blacklist + page clamp,
     # layout_predictor_gpu.py:303-312) fused into the cluster build —
     # one dict per surviving detection instead of postfilter's
-    # intermediate copy plus a second construction; same filter,
-    # identical clamp arithmetic (postfilter_detections itself stays the
-    # standalone kernel for the staged/detect path and its tests)
+    # intermediate copy plus a second construction; same constants,
+    # identical clamp arithmetic (postfilter_detections stays the
+    # standalone kernel)
     regular: list[dict] = []
     special: list[dict] = []
     max_input_id = 0
     for c in raw_clusters:
-        if c["confidence"] < 0.3:
+        if c["confidence"] < _BASE_THRESHOLD or c["label"] in _BLACKLIST:
             continue
         l = float(c["l"])
         t = float(c["t"])

@@ -1,24 +1,34 @@
 """Pipeline stages as vectorized Arrow UDF DataFrame transforms.
 
-Stage DAG (SURVEY.md §7):
+Two paths over the same kernels; ``pipeline.extract_spans`` picks one by
+``checkpoint_dir`` alone.
 
-  S0 docs      (doc_id, spans[])                      input corpus
-  S1 parse     docs → pages (cells + detections)      mapInPandas, 1→N rows
-  S2+S3+S6     pages → page elements                  mapInPandas, 1→1 rows
-  S7 assemble  elements → (doc_id, spans_out[])       groupBy(doc_id).applyInPandas
+Doc grain (no checkpoint_dir): :func:`doc_fused_stage` turns each
+document into ordered spans inside ONE mapInPandas stage. A document is
+self-contained, so this path has no shuffle and no second Python stage.
 
-Scale design:
-  - S1 explodes documents to page grain immediately, so a 400-page
-    mega-doc becomes 400 independent rows — skew from long documents is
-    handled by repartitioning the page table, not by bigger tasks
-    (reference analogue: batch splitter, lambda_preprocessor.py:47-58).
-  - S2/S3/S6 are narrow (no shuffle): Catalyst pipelines the chained
-    mapInPandas stages into one pass over each partition.
-  - The ONLY shuffle in the whole pipeline is the final groupBy(doc_id);
-    elements are text-sized (images/cells already dropped), so the
-    shuffled payload is small.
+Page grain (checkpoint_dir set), the S1-S3 outputs materialized to
+parquet:
+
+  S0 docs      (doc_id, spans[])                       input corpus
+  S1 parse     docs → pages (cells + typeset elements)  mapInPandas, 1→N rows
+  S2 detect    pages → pages with detections           model harness
+  S3+S6 layout pages → page elements                   mapInPandas, 1→1 rows
+  S7 assemble  elements → (doc_id, spans_out[])        repartition(doc_id)
+
+Page-grain scale design:
+  - S1 explodes documents to page grain, so a 400-page mega-doc becomes
+    400 independent rows that ``page_partitions`` can spread across the
+    cluster (reference analogue: batch splitter,
+    lambda_preprocessor.py:47-58).
+  - S2 batches pages ACROSS documents into fixed-size model calls (the
+    shape a GPU detector needs); S3 batches table structure across the
+    pages of each Arrow batch.
+  - The path's only shuffle is S7's repartition(doc_id); elements are
+    text-sized (images/cells already dropped), so the shuffled payload is
+    small.
   - Inside each stage the work is batched NumPy/Python over Arrow record
-    batches — no per-row Python UDFs (input_hint requirement).
+    batches — no per-row Python UDFs.
 """
 
 from __future__ import annotations
@@ -43,7 +53,7 @@ from ..corpus import (
     typeset,
 )
 from ..kernels.assemble import assemble_page_elements
-from ..kernels.convert import process_page_batch, process_parsed_batch
+from ..kernels.convert import process_parsed_batch
 from ..kernels.reading_order import assemble_spans
 from ..schemas import (
     ELEMENTS_SCHEMA,
@@ -246,8 +256,10 @@ def layout_stage(pages_df, cfg: GenConfig, lineage_dir: str | None = None,
     ACROSS the pages of each Arrow batch (mirrors the reference's ≤128
     cross-page table batches, tablemodel04_rs.py:186-202), then page
     assembly (page_assemble_model.py port). Narrow — no shuffle.
-    ``with_confidence`` adds the per-page PageConfidenceScores struct
-    (see convert_stage) — it rides the elements checkpoint too."""
+    ``with_confidence`` adds the per-page PageConfidenceScores struct,
+    computed here where the post-processed clusters still exist (a
+    partial aggregation that doc_assemble_stage folds into the
+    ConfidenceReport); it rides the elements checkpoint too."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernels import spatial_index as _si
 
@@ -316,100 +328,23 @@ def layout_stage(pages_df, cfg: GenConfig, lineage_dir: str | None = None,
 
 
 # --------------------------------------------------------------------------
-# fused S1+S2+S3+S6: docs → page elements in ONE Python stage
-# --------------------------------------------------------------------------
-
-def convert_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
-                  with_confidence: bool = False):
-    """Parse + layout + tables + page assembly fused into a single
-    mapInPandas stage (docs in, page-element rows out).
-
-    ``with_confidence`` computes PageConfidenceScores HERE — the page
-    grain, where the post-processed clusters still exist — and ships one
-    struct per page row (a partial aggregation); doc assembly folds them
-    into the ConfidenceReport. This is how the staged path carries
-    confidence without re-deriving clusters after the shuffle.
-
-    Why fused: chaining two mapInPandas transforms runs TWO Python workers
-    per task slot (the JVM pipes batches through both), which at local[C]
-    oversubscribes the machine ~3× and *inverts* scaling. One worker per
-    slot keeps the stage CPU-bound at exactly the configured parallelism,
-    and skips one full Arrow round-trip of the (heavy) cells column. The
-    unfused stages remain for the checkpointed/resumable path, where they
-    materialize to parquet anyway.
-    """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import spatial_index as _si
-
-        t0 = time.monotonic()
-        n_in = n_out = 0
-        grid0 = _si.GRID_CALLS
-        for pdf in batches:
-            items: list[tuple[str, object]] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                n_in += 1
-                span_list = [dict(s) for s in spans]
-                span_list.sort(key=lambda s: s["offset"])
-                items.extend((doc_id, page) for page in typeset(doc_id, span_list, cfg))
-            page_clusters = process_page_batch(items, cfg)
-            rows = []
-            for (doc_id, page), clusters in zip(items, page_clusters):
-                els = assemble_page_elements(doc_id, page.page_no, clusters)
-                page_no = page.page_no
-                row = {
-                    "doc_id": doc_id,
-                    "page_no": page_no,
-                    "elements": [
-                        {
-                            "label": e["label"],
-                            "l": e["l"], "t": e["t"], "r": e["r"], "b": e["b"],
-                            "text": e["text"],
-                            "media_ref": e["media_ref"],
-                            "children": e["children"],
-                        }
-                        for e in els
-                    ],
-                }
-                if with_confidence:
-                    from ..kernels.confidence import page_confidence
-
-                    row["page_confidence"] = page_confidence(page_no, clusters)
-                rows.append(row)
-            n_out += len(rows)
-            cols = ["doc_id", "page_no", "elements"] + (
-                ["page_confidence"] if with_confidence else []
-            )
-            yield pd.DataFrame(rows, columns=cols)
-        _write_lineage(lineage_dir, "convert", n_in, n_out, t0)
-        if _si.GRID_CALLS > grid0:
-            _write_lineage_ms(lineage_dir, "convert/grid_pages",
-                              _si.GRID_CALLS - grid0,
-                              _si.GRID_CALLS - grid0, 0.0)
-
-    from ..schemas import ELEMENTS_CONF_SCHEMA
-
-    return docs_df.mapInPandas(
-        fn, ELEMENTS_CONF_SCHEMA if with_confidence else ELEMENTS_SCHEMA
-    )
-
-
-# --------------------------------------------------------------------------
 # fully-fused doc-grain stage: docs → ordered spans, zero shuffles
 # --------------------------------------------------------------------------
 
 def doc_fused_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
                     with_confidence: bool = False):
-    """The zero-shuffle fast path: a document is self-contained, so parse →
-    layout → tables → assembly → reading order all run doc-locally in ONE
-    mapInPandas stage (the serial oracle per doc, parallelized by
-    partition). Table batches still form across all docs of an Arrow
-    batch.
+    """The default doc-grain path: a document is self-contained, so
+    parse → layout → OCR → tables → assembly → reading order all run
+    doc-locally in ONE mapInPandas stage (the serial oracle per doc,
+    parallelized by partition). Model batches (layout, OCR, tables) form
+    per document, not across the documents of an Arrow batch.
 
-    Trade-off vs the staged page-grain path: no shuffle and near-perfect
-    core scaling, but a mega-document is one task (fine while per-page
-    cost is CPU-milliseconds; switch to the staged path when page-level
-    model stages — GPU layout/OCR/TableFormer — need cross-doc batching
-    at page grain, or when stage checkpoints are required)."""
+    Trade-off vs the checkpointed page-grain path: no shuffle and
+    near-perfect core scaling, but a mega-document is one task (fine while
+    per-page cost is CPU-milliseconds; pass ``checkpoint_dir`` to
+    ``extract_spans`` when page-level model stages — GPU layout/OCR/
+    TableFormer — need cross-doc batching at page grain, or when stage
+    checkpoints are required)."""
     from ..oracle import extract_doc_result
     from ..schemas import SPANS_CONF_SCHEMA
 
@@ -428,6 +363,7 @@ def doc_fused_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
                 n += 1
                 # spans arrive from Arrow as fresh plain dicts and are
                 # read-only downstream — no defensive copy needed
+                # (tests/test_pipeline_e2e.py pins the no-mutation rule)
                 span_list = sorted(spans, key=_OFFSET_KEY)
                 res = extract_doc_result(doc_id, span_list, cfg,
                                          with_confidence=with_confidence,
@@ -457,9 +393,8 @@ def doc_fused_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
 # S7: document assembly — elements → ordered spans per doc
 # --------------------------------------------------------------------------
 
-def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
-                       num_partitions: int | None = None,
-                       cfg: GenConfig | None = None,
+def doc_assemble_stage(elements_df, cfg: GenConfig,
+                       lineage_dir: str | None = None,
                        with_confidence: bool = False):
     """Per-document assembly: co-locate each doc's pages via
     repartition(doc_id), then group INSIDE the partition and run reading
@@ -471,7 +406,7 @@ def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
     real work; one Arrow stream per PARTITION with an in-Python groupby
     is ~100× cheaper per doc and scales with cores. The in-group page
     sort makes the result independent of shuffle order (SURVEY.md §7).
-    This is the pipeline's single shuffle.
+    This is the page-grain path's single shuffle.
     """
     out_cols = ["doc_id", "spans"] + (["confidence"] if with_confidence else [])
 
@@ -492,14 +427,10 @@ def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
             "doc_id": doc_id,
             "spans": assemble_spans(
                 elements,
-                enable_merges=cfg.enable_merges if cfg else False,
-                process_list_markers=cfg.process_list_markers if cfg else False,
-                reading_order_mode=(
-                    getattr(cfg, "reading_order_mode", None) if cfg else None
-                ),
-                enrich_formulas=(
-                    getattr(cfg, "enrich_formulas", False) if cfg else False
-                ),
+                enable_merges=cfg.enable_merges,
+                process_list_markers=cfg.process_list_markers,
+                reading_order_mode=cfg.reading_order_mode,
+                enrich_formulas=cfg.enrich_formulas,
             ),
         }
         if with_confidence:
@@ -538,7 +469,7 @@ def doc_assemble_stage(elements_df, lineage_dir: str | None = None,
 
     from ..schemas import SPANS_CONF_SCHEMA
 
-    n = num_partitions or elements_df.sparkSession.sparkContext.defaultParallelism * 2
+    n = elements_df.sparkSession.sparkContext.defaultParallelism * 2
     return elements_df.repartition(n, "doc_id").mapInPandas(
         fn, SPANS_CONF_SCHEMA if with_confidence else SPANS_OUT_SCHEMA
     )

@@ -1,14 +1,16 @@
 """End-to-end extraction pipeline: docs → ordered spans.
 
 Wires the stages (operators/stages.py) with:
-  - optional parquet stage checkpoints keyed by (doc_id[, page_no]) — a
-    restarted job anti-joins completed keys and only processes the
-    remainder (north rule resumability; reference analogue: the phase
-    boundaries at main.py:53-80),
+  - the shuffle-free doc-grain stage by default,
+  - optional parquet stage checkpoints keyed by (doc_id[, page_no]) on
+    the page-grain path — a restarted job anti-joins completed keys and
+    only processes the remainder (north rule resumability; reference
+    analogue: the phase boundaries at main.py:53-80),
   - per-partition lineage rows,
-  - skew handling: repartition the page table by hash(doc_id, page_no)
-    right after the document→page explode so mega-docs spread across the
-    cluster (SURVEY.md §4 "skew handling").
+  - skew handling on the page-grain path: ``page_partitions``
+    repartitions the page table by hash(doc_id, page_no) right after the
+    document→page explode so mega-docs spread across the cluster
+    (SURVEY.md §4 "skew handling").
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpus import GenConfig, generate_doc
 from .operators.stages import (
-    convert_stage,
     detect_stage,
     doc_assemble_stage,
     doc_fused_stage,
@@ -124,17 +125,21 @@ def extract_spans(
     input_partitions: int | None = None,
     with_confidence: bool = False,
 ) -> DataFrame:
-    """Full S0→S7 pipeline.
+    """Full S0→S7 pipeline. ``checkpoint_dir`` alone picks the execution
+    path (partitioning/shuffle strategy is explicit, per the north rule):
+      - None (default): doc grain, ZERO shuffles — each partition converts
+        whole documents end-to-end in one Python stage
+        (``doc_fused_stage``). Fastest and perfectly scalable while stages
+        are CPU kernels.
+      - set: page-grain stages (parse → detect → layout), each resumable
+        from its parquet checkpoint, with one doc_id shuffle before
+        assembly — use when page-level model stages need cross-doc GPU
+        batching, when mega-docs need ``page_partitions``, or when
+        resumable stage checkpoints are required.
 
-    Execution modes (partitioning/shuffle strategy is explicit, per the
-    north rule):
-      - "fused" (default, checkpoint_dir=None): doc-grain, ZERO shuffles —
-        each partition converts whole documents end-to-end. Fastest and
-        perfectly scalable while stages are CPU kernels.
-      - "staged" (or checkpoint_dir set): page-grain stages with one
-        doc_id shuffle before assembly — use when page-level model stages
-        need cross-doc GPU batching or when resumable stage checkpoints
-        are required.
+    ``mode`` selects nothing: it is accepted so existing callers that pass
+    ``mode="fused"`` or ``mode="staged"`` keep working, and both run the
+    path ``checkpoint_dir`` picks.
     """
     # Parallelism guard: if the input still arrives with fewer splits than
     # cores (tiny corpus or in-memory DF), fan out once. The shuffle is
@@ -153,25 +158,14 @@ def extract_spans(
     if n_parts < target:
         docs_df = docs_df.repartition(target * 2, "doc_id")
 
-    if checkpoint_dir is None and mode == "fused":
+    if checkpoint_dir is None:
         # with_confidence adds the per-doc ConfidenceReport struct
         # (base_models.py:379-459) computed from the same post-processed
         # clusters as the spans
         return doc_fused_stage(docs_df, cfg, lineage_dir,
                                with_confidence=with_confidence)
 
-    if checkpoint_dir is None:
-        # staged lazy path: ONE Python stage docs→elements (see
-        # convert_stage docstring for why chaining two Python stages
-        # oversubscribes the executors), then the single shuffle.
-        # with_confidence rides as a per-page struct computed at the
-        # page grain (partial aggregation) and folded after the shuffle.
-        elements = convert_stage(docs_df, cfg, lineage_dir,
-                                 with_confidence=with_confidence)
-        return doc_assemble_stage(elements, lineage_dir, cfg=cfg,
-                                  with_confidence=with_confidence)
-
-    # Checkpointed staged path: parse → detect (model stage) → layout,
+    # Checkpointed page-grain path: parse → detect (model stage) → layout,
     # each materialized to parquet so no two Python stages chain in one
     # job (the 2-workers-per-slot oversubscription pitfall) and each is
     # independently resumable. The detect stage runs through the generic
@@ -201,5 +195,5 @@ def extract_spans(
         os.path.join(checkpoint_dir, "elements"),
         ["doc_id", "page_no"],
     )
-    return doc_assemble_stage(elements, lineage_dir, cfg=cfg,
+    return doc_assemble_stage(elements, cfg, lineage_dir,
                               with_confidence=with_confidence)

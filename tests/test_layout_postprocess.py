@@ -266,6 +266,52 @@ def test_postfilter_detections():
     assert postfilter_detections(out, 612.0, 792.0) == out
 
 
+def test_fused_postfilter_reads_the_postfilter_constants(monkeypatch):
+    """postprocess_page fuses the predictor-side postfilter into its
+    cluster build; running postfilter_detections first must change
+    nothing — with the default constants and with a blacklist — on
+    corpus pages plus off-page and sub-threshold boxes."""
+    import high_performance_docling_spark.kernels.layout_postprocess as LP
+    from high_performance_docling_spark.corpus import (
+        GenConfig, generate_doc, synth_detections, typeset,
+    )
+
+    cfg = GenConfig(seed=5, n_docs=6, noise=True, ocr_frac=0.2,
+                    keep_empty_clusters=True, dense_noise_boxes=30)
+    pages = []
+    for i in range(cfg.n_docs):
+        d = generate_doc(cfg, i)
+        for page in typeset(d["doc_id"], d["spans"], cfg):
+            dets = synth_detections(d["doc_id"], page, cfg)
+            top = max((x["id"] for x in dets), default=0)
+            dets += [
+                {"id": top + 1, "label": "text", "l": -20.0, "t": -5.0,
+                 "r": page.width + 30.0, "b": 40.0, "confidence": 0.9},
+                {"id": top + 2, "label": "picture", "l": 50.0, "t": 50.0,
+                 "r": 90.0, "b": page.height + 10.0, "confidence": 0.95},
+                {"id": top + 3, "label": "text", "l": 10.0, "t": 10.0,
+                 "r": 60.0, "b": 30.0, "confidence": LP._BASE_THRESHOLD},
+                {"id": top + 4, "label": "text", "l": 10.0, "t": 10.0,
+                 "r": 60.0, "b": 30.0, "confidence": 0.2999},
+            ]
+            pages.append((page.width, page.height, page.cells, dets))
+
+    def check(**kw):
+        for w, h, cells, dets in pages:
+            for keep in (False, True):
+                assert LP.postprocess_page(
+                    w, h, cells, dets, keep_empty_clusters=keep
+                ) == LP.postprocess_page(
+                    w, h, cells, LP.postfilter_detections(dets, w, h, **kw),
+                    keep_empty_clusters=keep,
+                )
+
+    check()
+    blacklist = frozenset({"picture", "key_value_region"})
+    monkeypatch.setattr(LP, "_BLACKLIST", blacklist)
+    check(blacklist=blacklist)
+
+
 @pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_select_best_big_group_vectorized_parity():
     """The >64-member vectorized exclusion scan in _select_best must pick

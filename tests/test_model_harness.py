@@ -259,9 +259,10 @@ def test_toy_ar_decoder_through_tableformer_batcher():
     assert results[0] == results[12]  # same start token -> same decode
 
 
-def test_staged_conv_detector_e2e_spans_exact(spark):
+def test_staged_conv_detector_e2e_spans_exact(spark, tmp_path):
     """e2e gate: spans stay EXACT when the real-math conv detector
-    replaces synth_detections in the staged path."""
+    replaces synth_detections in the checkpointed page-grain path (the
+    only path whose detect_stage reads cfg.detector)."""
     from high_performance_docling_spark.corpus import GenConfig
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -276,7 +277,8 @@ def test_staged_conv_detector_e2e_spans_exact(spark):
         return {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in rows}
 
     fused = spans(extract_spans(spark, docs, cfg).collect())
-    staged = spans(extract_spans(spark, docs, cfg, mode="staged").collect())
+    staged = spans(extract_spans(spark, docs, cfg,
+                                 checkpoint_dir=str(tmp_path / "ckpt")).collect())
     assert fused == staged and len(fused) == 12
     # and the output equals the serial oracle span-for-span
     from high_performance_docling_spark.oracle import extract_doc_spans
@@ -287,11 +289,12 @@ def test_staged_conv_detector_e2e_spans_exact(spark):
             doc_id
 
 
-def test_staged_conv_detector_exact_on_ocr_corpus(spark):
+def test_staged_conv_detector_exact_on_ocr_corpus(spark, tmp_path):
     """The real-math detector's ~1e-7 pt recovery error survives the OCR
     path too: synthetic OCR text keys on int-rounded crop geometry, so
     conv-detector staged spans equal synth-detector staged spans on a
-    scanned-region corpus."""
+    scanned-region corpus (checkpointed page-grain path, where
+    detect_stage dispatches on cfg.detector)."""
     from high_performance_docling_spark.corpus import GenConfig
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -308,8 +311,10 @@ def test_staged_conv_detector_exact_on_ocr_corpus(spark):
         return {r["doc_id"]: [s.asDict() for s in r["spans"]]
                 for r in df.collect()}
 
-    syn = spans(extract_spans(spark, docs, cfg_syn, mode="staged"))
-    conv = spans(extract_spans(spark, docs, cfg_conv, mode="staged"))
+    syn = spans(extract_spans(spark, docs, cfg_syn,
+                              checkpoint_dir=str(tmp_path / "syn")))
+    conv = spans(extract_spans(spark, docs, cfg_conv,
+                               checkpoint_dir=str(tmp_path / "conv")))
     assert syn == conv and len(conv) == 8
     # non-vacuous: scanned OCR text is present in the output
     assert any("scanned region" in s["text"]

@@ -26,18 +26,24 @@ def test_spark_matches_oracle_exactly(spark):
         assert got[doc_id] == extract_doc_spans(doc_id, in_spans, CFG), doc_id
 
 
-def test_staged_mode_equals_fused_mode(spark):
+def test_staged_mode_equals_fused_mode(spark, tmp_path):
+    """The checkpointed page-grain path (parse → detect → layout, then the
+    doc_id shuffle into doc_assemble_stage) equals the lazy doc-grain
+    path on the mega-doc corpus."""
     docs = docs_dataframe(spark, CFG, num_partitions=6)
-    fused = _spans(extract_spans(spark, docs, CFG, mode="fused").collect())
-    staged = _spans(extract_spans(spark, docs, CFG, mode="staged").collect())
-    assert fused == staged
+    lazy = _spans(extract_spans(spark, docs, CFG).collect())
+    paged = _spans(extract_spans(spark, docs, CFG,
+                                 checkpoint_dir=str(tmp_path / "ckpt")).collect())
+    assert len(lazy) == CFG.n_docs
+    assert lazy == paged
 
 
 def test_mega_cluster_page_grid_path_staged_e2e(spark, tmp_path):
     """VERDICT r4 #7: a pathological ≥20k-cluster page driven through the
-    DISTRIBUTED pipeline (staged mode), not just the kernel: spans stay
-    EXACT (equal to both the serial oracle and the same doc without the
-    density stress) and the lineage stream records the grid path taken."""
+    DISTRIBUTED page-grain pipeline (checkpointed), not just the kernel:
+    spans stay EXACT (equal to both the serial oracle and the same doc
+    without the density stress) and the lineage stream records the grid
+    path taken in the layout stage."""
     import json
 
     dense = GenConfig(seed=21, n_docs=2, pages_min=1, pages_max=1,
@@ -56,8 +62,8 @@ def test_mega_cluster_page_grid_path_staged_e2e(spark, tmp_path):
     docs = docs_dataframe(spark, dense, num_partitions=2)
     ldir = str(tmp_path / "lineage")
     got = _spans(
-        extract_spans(spark, docs, dense, mode="staged",
-                      lineage_dir=ldir).collect()
+        extract_spans(spark, docs, dense, lineage_dir=ldir,
+                      checkpoint_dir=str(tmp_path / "ckpt")).collect()
     )
     inputs = _spans(docs.collect())
     for doc_id, in_spans in inputs.items():
@@ -71,7 +77,7 @@ def test_mega_cluster_page_grid_path_staged_e2e(spark, tmp_path):
         if fname.endswith(".jsonl"):
             with open(os.path.join(ldir, fname)) as f:
                 rows += [json.loads(line) for line in f]
-    grid_rows = [r for r in rows if r["stage"].endswith("grid_pages")]
+    grid_rows = [r for r in rows if r["stage"] == "layout/grid_pages"]
     assert grid_rows and sum(r["input_rows"] for r in grid_rows) >= 2, rows
 
 
@@ -107,16 +113,23 @@ def test_checkpoint_resume(spark, tmp_path):
 
 
 def test_lineage_rows_written(spark, tmp_path):
+    """Every run without checkpoint_dir, whatever ``mode`` says, runs the
+    doc-grain stage; only a checkpointed run writes page-grain rows."""
     cfg = GenConfig(seed=3, n_docs=4)
-    ldir = str(tmp_path / "lineage")
     docs = docs_dataframe(spark, cfg, num_partitions=2)
-    extract_spans(spark, docs, cfg, lineage_dir=ldir).collect()
+    for mode in ("fused", "staged"):
+        ldir = str(tmp_path / f"lineage-{mode}")
+        extract_spans(spark, docs, cfg, lineage_dir=ldir, mode=mode).collect()
+        files = os.listdir(ldir)
+        assert any(f.startswith("doc_fused") for f in files), mode
+        assert not any(f.startswith("assemble") for f in files), mode
+    ldir = str(tmp_path / "lineage-ckpt")
+    extract_spans(spark, docs, cfg, lineage_dir=ldir,
+                  checkpoint_dir=str(tmp_path / "ckpt")).collect()
     files = os.listdir(ldir)
-    assert any(f.startswith("doc_fused") for f in files)
-    extract_spans(spark, docs, cfg, lineage_dir=ldir, mode="staged").collect()
-    files = os.listdir(ldir)
-    assert any(f.startswith("convert") for f in files)
-    assert any(f.startswith("assemble") for f in files)
+    for stage in ("parse", "detect", "layout", "assemble"):
+        assert any(f.startswith(stage + "-") for f in files), stage
+    assert not any(f.startswith("doc_fused") for f in files)
 
 
 def test_checkpoint_recovers_from_uncommitted_write(spark, tmp_path):
@@ -222,3 +235,47 @@ def test_fused_lineage_reports_per_phase_timers(spark, tmp_path):
         assert phase in by_stage and by_stage[phase] > 0.0, phase
     phase_sum = sum(v for k, v in by_stage.items() if k.startswith("doc_fused/"))
     assert phase_sum <= by_stage["doc_fused"] * 1.05
+
+
+def test_doc_grain_path_leaves_input_spans_unchanged(tmp_path):
+    """doc_fused_stage hands the Arrow-decoded span dicts straight to
+    extract_doc_result without a defensive copy, so neither may mutate
+    them: a change would alias into the caller's rows. Checked on a
+    corpus that runs OCR, merges, list markers, noise and confidence."""
+    import copy
+
+    import pandas as pd
+
+    from high_performance_docling_spark.corpus import generate_doc
+    from high_performance_docling_spark.oracle import extract_doc_result
+    from high_performance_docling_spark.operators.stages import doc_fused_stage
+
+    cfg = GenConfig(seed=11, n_docs=8, noise=True, ocr_frac=0.3,
+                    keep_empty_clusters=True, enable_merges=True,
+                    process_list_markers=True, mega_frac=0.2, mega_pages=6)
+    docs = [generate_doc(cfg, i) for i in range(cfg.n_docs)]
+    before = copy.deepcopy(docs)
+
+    for d in docs:
+        extract_doc_result(d["doc_id"], d["spans"], cfg, with_confidence=True)
+    assert docs == before
+
+    class _CaptureStage:
+        """Stands in for a DataFrame: keeps the mapInPandas body."""
+
+        def mapInPandas(self, fn, schema):
+            self.fn = fn
+            return self
+
+    # shuffled span order: the stage sorts by offset without copying
+    pdf = pd.DataFrame({"doc_id": [d["doc_id"] for d in docs],
+                        "spans": [d["spans"][::-1] for d in docs]})
+    for lineage_dir in (None, str(tmp_path / "lineage")):
+        stage = doc_fused_stage(_CaptureStage(), cfg, lineage_dir,
+                                with_confidence=True)
+        (out,) = list(stage.fn(iter([pdf])))
+        assert docs == before
+        assert [s for d in pdf["spans"] for s in d] == [
+            s for d in before for s in d["spans"][::-1]]
+        for d, got in zip(before, out["spans"]):
+            assert got == extract_doc_spans(d["doc_id"], d["spans"], cfg)

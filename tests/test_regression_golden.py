@@ -37,8 +37,8 @@ def test_spans_match_frozen_goldens():
 def test_enriched_profile_spans_match_goldens_all_modes(spark, tmp_path):
     """Docling-parity output profile (VERDICT r4 #4): enrichment ON +
     merges + markers; the tested invariant is the ENRICHED span sequence
-    (spans_enriched_seed42.json) — serial oracle, fused, staged, and
-    checkpointed-staged execution all produce it exactly."""
+    (spans_enriched_seed42.json) — serial oracle, doc-grain and
+    checkpointed page-grain execution all produce it exactly."""
     from high_performance_docling_spark.corpus import docling_parity_config
     from high_performance_docling_spark.pipeline import (
         docs_dataframe,
@@ -75,16 +75,9 @@ def test_enriched_profile_spans_match_goldens_all_modes(spark, tmp_path):
     assert serial == want
 
     docs = docs_dataframe(spark, cfg, num_partitions=4)
-    for mode, kw in (
-        ("fused", {}),
-        ("staged", {}),
-        ("staged-checkpointed", {"checkpoint_dir": str(tmp_path / "ckpt")}),
-    ):
-        got = norm(
-            extract_spans(spark, docs, cfg,
-                          mode=mode.split("-")[0], **kw).collect()
-        )
-        assert got == want, mode
+    for ckpt in (None, str(tmp_path / "ckpt")):
+        got = norm(extract_spans(spark, docs, cfg, checkpoint_dir=ckpt).collect())
+        assert got == want, ckpt
 
     # non-vacuous: the profile's output DIFFERS from the raw profile on
     # formula spans (enrichment actually ran)
