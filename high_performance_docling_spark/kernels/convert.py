@@ -1,7 +1,11 @@
-"""Shared page-batch conversion core: postprocess → OCR → tables.
+"""Shared conversion core: layout detection → postprocess → OCR → tables.
 
-Used by both the Spark stages (operators/stages.py) and the serial
-oracle so the two can't drift.
+The one copy of these phases and of how ``GenConfig`` drives them. The
+serial oracle runs :func:`process_page_batch` per document (and the
+doc-grain Spark stage runs the oracle); the page-grain Spark stages run
+the same functions split at the detection boundary: ``detect_stage``
+builds its model from :func:`synth_detector_spec` and ``layout_stage``
+calls :func:`convert_detected_pages`. So the two paths can't drift.
 
 OCR stage (reference: gpu_processor.py:204-288):
   - identify: text-labeled clusters with zero cells (:204-234) — requires
@@ -16,11 +20,12 @@ OCR stage (reference: gpu_processor.py:204-288):
 
 from __future__ import annotations
 
-from typing import Any
+import time
 
 from ..corpus import GenConfig, TypesetPage, synth_detections
 from ..labels import CAPTION, FOOTNOTE, LIST_ITEM, SECTION_HEADER, TEXT
 from .layout_postprocess import postprocess_page
+from .model_harness import FixedBatcher, ModelSpec
 from .table_decode import attach_table_structures
 
 OCR_TEXT_LABELS = {TEXT, SECTION_HEADER, CAPTION, FOOTNOTE, LIST_ITEM}
@@ -53,20 +58,16 @@ class SynthOcrModel:
         return [synth_ocr_text(*crop) for crop in crops]
 
 
-_OCR_MODEL_SPEC = None
+_OCR_MODEL_SPEC = ModelSpec(
+    name="synth-ocr",
+    loader=SynthOcrModel,
+    batch_size=OCR_BATCH_SIZE,
+    pad_by_repeat=False,  # CPU stand-in; a static-shape GPU model pads
+)
 
 
-def _ocr_model_spec():
-    global _OCR_MODEL_SPEC
-    if _OCR_MODEL_SPEC is None:
-        from ..operators.model_harness import ModelSpec
-
-        _OCR_MODEL_SPEC = ModelSpec(
-            name="synth-ocr",
-            loader=SynthOcrModel,
-            batch_size=OCR_BATCH_SIZE,
-            pad_by_repeat=False,  # CPU stand-in; a static-shape GPU model pads
-        )
+def _ocr_model_spec() -> ModelSpec:
+    """The OCR spec, for callers that look the singleton up themselves."""
     return _OCR_MODEL_SPEC
 
 
@@ -79,8 +80,6 @@ def apply_ocr(
     gpu_processor.py:236-258), join results back onto their clusters
     (mutates page_clusters). OCR batches form across documents, like the
     reference's cross-page batching."""
-    from ..operators.model_harness import FixedBatcher
-
     tasks: list[tuple[int, dict]] = []
     for pi, clusters in enumerate(page_clusters):
         for cluster in clusters:
@@ -88,7 +87,7 @@ def apply_ocr(
                 tasks.append((pi, cluster))
     if not tasks:
         return
-    batcher = FixedBatcher(_ocr_model_spec(), SynthOcrModel.recognize_batch)
+    batcher = FixedBatcher(_OCR_MODEL_SPEC, SynthOcrModel.recognize_batch)
     crops = [
         (meta[pi][0], meta[pi][1], cl["l"], cl["t"], cl["r"], cl["b"])
         for pi, cl in tasks
@@ -105,79 +104,90 @@ def apply_ocr(
         )
 
 
-def _detect_batch(
-    items: list[tuple[str, TypesetPage]], cfg: GenConfig
-) -> list[list[dict]]:
-    """Layout detection through the model harness (same executor-local
-    singleton + fixed 32-page batches as the page-grain detect_stage), so
-    the doc-grain path exercises the identical model seam. Always the
-    synth detector: ``cfg.detector`` is read only by detect_stage."""
-    from ..operators.model_harness import FixedBatcher, ModelSpec
-    from ..operators.stages import SynthLayoutDetector
+class SynthLayoutDetector:
+    """Executor-local singleton 'model'. A real deployment replaces this
+    class with the RT-DETR load (weights, processor, warm-up —
+    layout_predictor_gpu.py:92-137) and predict_batch with one batched
+    forward; the Spark stage around it does not change."""
 
-    spec = ModelSpec(
+    def __init__(self, cfg: GenConfig):
+        self.cfg = cfg
+        self.n_forward_calls = 0
+
+    def predict_batch(self, items: list[tuple[str, TypesetPage]]) -> list[list[dict]]:
+        # ONE batched forward pass per call (the GPU-inference slot)
+        self.n_forward_calls += 1
+        return [synth_detections(doc_id, page, self.cfg) for doc_id, page in items]
+
+
+def synth_detector_spec(
+    cfg: GenConfig, pad_by_repeat: bool, batch_size: int = 32
+) -> ModelSpec:
+    """Harness spec of the synth detector. Both paths share one
+    executor-local instance per ``cfg``: the doc-grain path runs it
+    unpadded (a CPU stand-in), the page-grain detect_stage pads (a
+    CUDA-graph model needs a static batch shape)."""
+    return ModelSpec(
         name=f"synth-layout-detector:{cfg!r}",  # full cfg: any field changes detector behavior
         loader=lambda: SynthLayoutDetector(cfg),
-        batch_size=32,
-        pad_by_repeat=False,  # CPU stand-in in the fused path; the staged
-        # GPU-shaped stage pads (detect_stage)
+        batch_size=batch_size,
+        pad_by_repeat=pad_by_repeat,
     )
-    return FixedBatcher(spec, SynthLayoutDetector.predict_batch).run(items)
+
+
+def mark_phase(timers: dict[str, float] | None, key: str, t0: float) -> float:
+    """Add the wall ms since ``t0`` to ``timers[key]`` (when timing) and
+    return the current time, the next phase's start."""
+    t1 = time.monotonic()
+    if timers is not None:
+        timers[key] = timers.get(key, 0.0) + (t1 - t0) * 1000.0
+    return t1
 
 
 def process_page_batch(
     items: list[tuple[str, TypesetPage]], cfg: GenConfig,
     timers: dict[str, float] | None = None,
 ) -> list[list[dict]]:
-    """Layout postprocess each page, then OCR fill, then table structure —
-    layout, OCR and table model batches all form across the pages of
-    ``items`` (one document's pages on the doc-grain path), each through
-    the executor-local harness singleton.
+    """Layout detection, then :func:`convert_detected_pages` — the
+    oracle's conversion of ``items`` (one document's pages on the
+    doc-grain path). Detection runs the synth detector through the
+    harness singleton in unpadded 32-page batches; ``cfg.detector`` is
+    read only by the page-grain detect_stage.
 
     ``timers`` (optional) accumulates per-phase wall ms under the
     reference's timer field names (gpu_processor.py:102-129 layout
     predict/postprocess, :204-234 OCR; tf_predictor.py:556-562 tables) —
     the lineage sink turns them into the per-run timer dump."""
-    import time as _time
+    t = time.monotonic()
+    detections = FixedBatcher(
+        synth_detector_spec(cfg, pad_by_repeat=False),
+        SynthLayoutDetector.predict_batch,
+    ).run(items)
+    mark_phase(timers, "layout_predict", t)
+    return convert_detected_pages(items, detections, cfg, timers)
 
-    def _mark(key: str, t0: float) -> float:
-        t1 = _time.monotonic()
-        if timers is not None:
-            timers[key] = timers.get(key, 0.0) + (t1 - t0) * 1000.0
-        return t1
 
-    t = _time.monotonic()
-    detections = _detect_batch(items, cfg)
-    t = _mark("layout_predict", t)
+def convert_detected_pages(
+    items: list[tuple[str, TypesetPage]], detections: list[list[dict]],
+    cfg: GenConfig, timers: dict[str, float] | None = None,
+) -> list[list[dict]]:
+    """Layout postprocess each page, then OCR fill, then table structure:
+    page ``items`` (doc_id, page) with their raw ``detections`` → the
+    post-processed clusters per page. OCR and table model batches form
+    across all of ``items``, each through the executor-local harness
+    singleton. Pages need only page_no, width, height and cells."""
+    t = time.monotonic()
     page_clusters = [
         postprocess_page(
             p.width, p.height, p.cells, dets,
             keep_empty_clusters=cfg.keep_empty_clusters,
         )
-        for (doc_id, p), dets in zip(items, detections)
+        for (_, p), dets in zip(items, detections)
     ]
-    t = _mark("layout_postprocess", t)
+    t = mark_phase(timers, "layout_postprocess", t)
     if cfg.keep_empty_clusters:
         apply_ocr([(doc_id, p.page_no) for doc_id, p in items], page_clusters)
-        t = _mark("ocr", t)
+        t = mark_phase(timers, "ocr", t)
     attach_table_structures(page_clusters, [p.cells for _, p in items])
-    _mark("table_structure", t)
-    return page_clusters
-
-
-def process_parsed_batch(rows: list[dict], cfg: GenConfig) -> list[list[dict]]:
-    """Same as process_page_batch but from already-parsed page rows
-    (doc_id, page_no, width, height, cells, detections) — the
-    checkpointed page-grain path, where detections were materialized by
-    S1/S2."""
-    page_clusters = [
-        postprocess_page(
-            row["width"], row["height"], row["cells"], row["detections"],
-            keep_empty_clusters=cfg.keep_empty_clusters,
-        )
-        for row in rows
-    ]
-    if cfg.keep_empty_clusters:
-        apply_ocr([(r["doc_id"], r["page_no"]) for r in rows], page_clusters)
-    attach_table_structures(page_clusters, [r["cells"] for r in rows])
+    mark_phase(timers, "table_structure", t)
     return page_clusters

@@ -17,6 +17,8 @@ from __future__ import annotations
 import re
 from typing import Any, Optional
 
+from .model_harness import FixedBatcher, ModelSpec
+
 _CODE_LANG_RE = re.compile(r"^<_([^_>]+)_>\s(.*)", flags=re.DOTALL)
 
 ENRICH_BATCH_SIZE = 5  # code_formula_model.py:69
@@ -101,21 +103,12 @@ class SynthEnrichmentModel:
         return batch
 
 
-_ENRICH_MODEL_SPEC = None
-
-
-def _enrich_model_spec():
-    global _ENRICH_MODEL_SPEC
-    if _ENRICH_MODEL_SPEC is None:
-        from ..operators.model_harness import ModelSpec
-
-        _ENRICH_MODEL_SPEC = ModelSpec(
-            name="synth-enrichment-vlm",
-            loader=SynthEnrichmentModel,
-            batch_size=ENRICH_BATCH_SIZE,
-            pad_by_repeat=False,  # CPU stand-in; static-shape GPU model pads
-        )
-    return _ENRICH_MODEL_SPEC
+_ENRICH_MODEL_SPEC = ModelSpec(
+    name="synth-enrichment-vlm",
+    loader=SynthEnrichmentModel,
+    batch_size=ENRICH_BATCH_SIZE,
+    pad_by_repeat=False,  # CPU stand-in; static-shape GPU model pads
+)
 
 
 def enrich_elements(
@@ -126,13 +119,9 @@ def enrich_elements(
     the code-language prefix into ``code_language`` and rewrites formula
     text to LaTeX via the deterministic rule chain (the VLM stand-in).
     Mutates and returns the element list."""
-    from ..operators.model_harness import FixedBatcher
-
     work = [e for e in elements if e.get("label") in ("code", "formula")]
     if work:
-        batcher = FixedBatcher(
-            _enrich_model_spec(), SynthEnrichmentModel.enrich_batch
-        )
+        batcher = FixedBatcher(_ENRICH_MODEL_SPEC, SynthEnrichmentModel.enrich_batch)
         batcher.run(work)
         if stats is not None:
             stats["n_forward_calls"] = batcher.n_forward_calls

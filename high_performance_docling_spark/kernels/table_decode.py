@@ -22,6 +22,7 @@ from __future__ import annotations
 from bisect import bisect_right as _bisect_right
 from typing import Any
 
+from .model_harness import FixedBatcher, ModelSpec
 from .otsl import OtslCorrector, build_table_cells, check_bbox_sync, translate_bboxes
 from .table_match import (
     compact_row_col_indexes,
@@ -324,23 +325,14 @@ class GeometricTableDecoder:
         ]
 
 
-_TABLE_MODEL_SPEC = None
-
-
-def _table_model_spec():
-    global _TABLE_MODEL_SPEC
-    if _TABLE_MODEL_SPEC is None:
-        from ..operators.model_harness import ModelSpec
-
-        # pad_by_repeat=False: this decoder is a CPU kernel — padding
-        # would burn real work; a CUDA-graph decoder flips it to True
-        _TABLE_MODEL_SPEC = ModelSpec(
-            name="geometric-table-decoder",
-            loader=GeometricTableDecoder,
-            batch_size=MAX_TABLE_BATCH,
-            pad_by_repeat=False,
-        )
-    return _TABLE_MODEL_SPEC
+# pad_by_repeat=False: this decoder is a CPU kernel — padding would burn
+# real work; a CUDA-graph decoder flips it to True
+_TABLE_MODEL_SPEC = ModelSpec(
+    name="geometric-table-decoder",
+    loader=GeometricTableDecoder,
+    batch_size=MAX_TABLE_BATCH,
+    pad_by_repeat=False,
+)
 
 
 def decode_tables_batch(work_items: list[dict[str, Any]]) -> list[dict[str, Any] | None]:
@@ -348,9 +340,7 @@ def decode_tables_batch(work_items: list[dict[str, Any]]) -> list[dict[str, Any]
     decoder (model harness) processes work items in fixed chunks of
     MAX_TABLE_BATCH, mirroring the reference's dynamic chunking.
     Each item: {"table_bbox": [...], "tokens": [...]}."""
-    from ..operators.model_harness import FixedBatcher
-
     if not work_items:
         return []
-    batcher = FixedBatcher(_table_model_spec(), GeometricTableDecoder.decode_batch)
+    batcher = FixedBatcher(_TABLE_MODEL_SPEC, GeometricTableDecoder.decode_batch)
     return batcher.run(work_items)

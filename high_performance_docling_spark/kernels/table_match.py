@@ -297,12 +297,19 @@ def _align_cells_to_pdf(table_cells, pdf_cells, matches):
 
 def _deduplicate_columns(tab_columns, table_cells, iou_matches, ioc_matches):
     """Drop the lower-scoring of two adjacent columns whose pdf-cell sets
-    overlap >60% — :541-680."""
+    overlap >60% — :541-680.
+
+    Requires unique ``cell_id``s in ``table_cells`` (the decoder numbers
+    cells one per emitting tag): the single cell_id → column_id map below
+    stands in for the reference's per-column scans only then, so a
+    duplicate id raises ``ValueError``."""
     # cell_id → column map turns the per-column O(matches × cells) scans
     # into two single passes; per-column float additions happen in the
     # same order as the reference's per-column loops (iou dict order,
     # then ioc dict order), so the scores are bit-identical
     col_of = {c["cell_id"]: c["column_id"] for c in table_cells}
+    if len(col_of) != len(table_cells):
+        raise ValueError("_deduplicate_columns: duplicate cell_id in table_cells")
     pdf_iou_by_col: list[list] = [[] for _ in range(tab_columns)]
     pdf_ioc_by_col: list[list] = [[] for _ in range(tab_columns)]
     score_in_col = [0.0] * tab_columns

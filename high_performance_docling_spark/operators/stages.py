@@ -8,7 +8,10 @@ document into ordered spans inside ONE mapInPandas stage. A document is
 self-contained, so this path has no shuffle and no second Python stage.
 
 Page grain (checkpoint_dir set), the S1-S3 outputs materialized to
-parquet:
+parquet. Each stage is an Arrow wrapper around the functions the serial
+oracle runs (kernels/convert.py's detector spec and conversion core,
+oracle.assemble_doc), so both paths compute spans with one copy of each
+phase:
 
   S0 docs      (doc_id, spans[])                       input corpus
   S1 parse     docs → pages (cells + typeset elements)  mapInPandas, 1→N rows
@@ -49,12 +52,16 @@ from ..corpus import (
     TypesetPage,
     element_from_dict,
     element_to_dict,
-    synth_detections,
     typeset,
 )
 from ..kernels.assemble import assemble_page_elements
-from ..kernels.convert import process_parsed_batch
-from ..kernels.reading_order import assemble_spans
+from ..kernels.confidence import page_confidence
+from ..kernels.convert import (  # noqa: F401 (SynthLayoutDetector re-exported)
+    SynthLayoutDetector,
+    convert_detected_pages,
+    synth_detector_spec,
+)
+from ..oracle import assemble_doc, extract_doc_result
 from ..schemas import (
     ELEMENTS_SCHEMA,
     PAGES_SCHEMA,
@@ -101,14 +108,9 @@ def _write_lineage(lineage_dir: str | None, stage: str, n_in: int, n_out: int, t
 # S1: parse — docs → pages (the synthetic "PDF backend" scan)
 # --------------------------------------------------------------------------
 
-def parse_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
-                with_detections: bool = True):
-    """(doc_id, spans[]) → one row per page.
-
-    with_detections=True (legacy single-stage form): cells + raw
-    detections, the synthetic detector invoked inline.
-    with_detections=False (staged model path): cells + typeset `elements`
-    (this corpus's stand-in for the rendered page image); detection runs
+def parse_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None):
+    """(doc_id, spans[]) → one row per page: cells + typeset `elements`
+    (this corpus's stand-in for the rendered page image). Detection runs
     in the separate :func:`detect_stage` model stage.
 
     Reference analogue: per-page load/parse (lambda_preprocessor.py:15-44);
@@ -117,8 +119,7 @@ def parse_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         t0 = time.monotonic()
         n_in = n_out = 0
-        cols = ["doc_id", "page_no", "width", "height", "cells",
-                "detections" if with_detections else "elements"]
+        cols = ["doc_id", "page_no", "width", "height", "cells", "elements"]
         for pdf in batches:
             rows: list[dict[str, Any]] = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
@@ -127,46 +128,24 @@ def parse_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
                 span_list.sort(key=lambda s: s["offset"])
                 pages = typeset(doc_id, span_list, cfg)
                 for page in pages:
-                    row = {
+                    rows.append({
                         "doc_id": doc_id,
                         "page_no": page.page_no,
                         "width": page.width,
                         "height": page.height,
                         "cells": page.cells,
-                    }
-                    if with_detections:
-                        row["detections"] = synth_detections(doc_id, page, cfg)
-                    else:
-                        row["elements"] = [element_to_dict(e) for e in page.elements]
-                    rows.append(row)
+                        "elements": [element_to_dict(e) for e in page.elements],
+                    })
             n_out += len(rows)
             yield pd.DataFrame(rows, columns=cols)
         _write_lineage(lineage_dir, "parse", n_in, n_out, t0)
 
-    return docs_df.mapInPandas(
-        fn, PAGES_SCHEMA if with_detections else PARSED_PAGES_SCHEMA
-    )
+    return docs_df.mapInPandas(fn, PARSED_PAGES_SCHEMA)
 
 
 # --------------------------------------------------------------------------
 # S2: layout detection — a batched model stage through the generic harness
 # --------------------------------------------------------------------------
-
-class SynthLayoutDetector:
-    """Executor-local singleton 'model'. A real deployment replaces this
-    class with the RT-DETR load (weights, processor, warm-up —
-    layout_predictor_gpu.py:92-137) and predict_batch with one batched
-    forward; the Spark stage around it does not change."""
-
-    def __init__(self, cfg: GenConfig):
-        self.cfg = cfg
-        self.n_forward_calls = 0
-
-    def predict_batch(self, items: list[tuple[str, TypesetPage]]) -> list[list[dict]]:
-        # ONE batched forward pass per call (the GPU-inference slot)
-        self.n_forward_calls += 1
-        return [synth_detections(doc_id, page, self.cfg) for doc_id, page in items]
-
 
 def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None,
                  batch_size: int = 32):
@@ -199,16 +178,8 @@ def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None,
             return render_detect_input(
                 float(row["width"]), float(row["height"]), row["elements"]
             )
-
-        def forward(model, items: list) -> list:
-            return model.predict_batch(items)
     else:
-        spec = ModelSpec(
-            name=f"synth-layout-detector:{cfg!r}",  # full cfg: any field changes detector behavior
-            loader=lambda: SynthLayoutDetector(cfg),
-            batch_size=batch_size,
-            pad_by_repeat=True,  # a CUDA-graph model needs static batch shape
-        )
+        spec = synth_detector_spec(cfg, pad_by_repeat=True, batch_size=batch_size)
 
         def item_fn(row: dict) -> tuple[str, TypesetPage]:
             page = TypesetPage(
@@ -223,8 +194,8 @@ def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None,
             )
             return (row["doc_id"], page)
 
-        def forward(model: SynthLayoutDetector, items: list) -> list:
-            return model.predict_batch(items)
+    def forward(model, items: list) -> list:
+        return model.predict_batch(items)
 
     def result_fn(row: dict, dets: list[dict]) -> dict:
         return {
@@ -251,11 +222,13 @@ def detect_stage(parsed_df, cfg: GenConfig, lineage_dir: str | None = None,
 
 def layout_stage(pages_df, cfg: GenConfig, lineage_dir: str | None = None,
                  with_confidence: bool = False):
-    """One row per page in, one row per page out: layout post-processing
-    (layout_postprocessor.py port), table-structure decoding batched
-    ACROSS the pages of each Arrow batch (mirrors the reference's ≤128
-    cross-page table batches, tablemodel04_rs.py:186-202), then page
-    assembly (page_assemble_model.py port). Narrow — no shuffle.
+    """One row per page in, one row per page out: the oracle's
+    post-detection conversion (kernels/convert.convert_detected_pages:
+    layout post-processing, OCR fill, table structure) with its OCR and
+    table batches formed ACROSS the pages of each Arrow batch (mirrors
+    the reference's ≤128 cross-page table batches,
+    tablemodel04_rs.py:186-202), then page assembly
+    (page_assemble_model.py port). Narrow — no shuffle.
     ``with_confidence`` adds the per-page PageConfidenceScores struct,
     computed here where the post-processed clusters still exist (a
     partial aggregation that doc_assemble_stage folds into the
@@ -267,44 +240,28 @@ def layout_stage(pages_df, cfg: GenConfig, lineage_dir: str | None = None,
         n = 0
         grid0 = _si.GRID_CALLS
         for pdf in batches:
-            rows = []
+            items, detections = [], []
             for doc_id, page_no, width, height, cells, dets in zip(
                 pdf["doc_id"], pdf["page_no"], pdf["width"], pdf["height"],
                 pdf["cells"], pdf["detections"],
             ):
                 n += 1
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "page_no": int(page_no),
-                        "width": float(width),
-                        "height": float(height),
-                        "cells": [dict(c) for c in cells],
-                        "detections": [dict(d) for d in dets],
-                    }
-                )
-            page_clusters = process_parsed_batch(rows, cfg)
+                items.append((doc_id, TypesetPage(
+                    page_no=int(page_no), width=float(width),
+                    height=float(height), cells=[dict(c) for c in cells],
+                )))
+                detections.append([dict(d) for d in dets])
+            page_clusters = convert_detected_pages(items, detections, cfg)
             out_elements = []
             out_conf = []
-            for row, clusters in zip(rows, page_clusters):
-                doc_id, page_no = row["doc_id"], row["page_no"]
-                els = assemble_page_elements(doc_id, page_no, clusters)
+            for (doc_id, page), clusters in zip(items, page_clusters):
+                # the schema's struct keeps only ELEMENT_STRUCT's fields:
+                # the extra cid/page_no keys are dropped on the way to Arrow
                 out_elements.append(
-                    [
-                        {
-                            "label": e["label"],
-                            "l": e["l"], "t": e["t"], "r": e["r"], "b": e["b"],
-                            "text": e["text"],
-                            "media_ref": e["media_ref"],
-                            "children": e["children"],
-                        }
-                        for e in els
-                    ]
+                    assemble_page_elements(doc_id, page.page_no, clusters)
                 )
                 if with_confidence:
-                    from ..kernels.confidence import page_confidence
-
-                    out_conf.append(page_confidence(page_no, clusters))
+                    out_conf.append(page_confidence(page.page_no, clusters))
             data = {
                 "doc_id": pdf["doc_id"],
                 "page_no": pdf["page_no"],
@@ -345,7 +302,6 @@ def doc_fused_stage(docs_df, cfg: GenConfig, lineage_dir: str | None = None,
     ``extract_spans`` when page-level model stages — GPU layout/OCR/
     TableFormer — need cross-doc batching at page grain, or when stage
     checkpoints are required)."""
-    from ..oracle import extract_doc_result
     from ..schemas import SPANS_CONF_SCHEMA
 
     cols = ["doc_id", "spans"] + (["confidence"] if with_confidence else [])
@@ -397,8 +353,10 @@ def doc_assemble_stage(elements_df, cfg: GenConfig,
                        lineage_dir: str | None = None,
                        with_confidence: bool = False):
     """Per-document assembly: co-locate each doc's pages via
-    repartition(doc_id), then group INSIDE the partition and run reading
-    order + caption/footnote attachment, emitting the ordered span array.
+    repartition(doc_id), then group INSIDE the partition and hand each
+    document's page-sorted elements to :func:`oracle.assemble_doc` (the
+    oracle's reading order + caption/footnote attachment), emitting the
+    ordered span array.
 
     Deliberately ``repartition + mapInPandas`` instead of
     ``groupBy().applyInPandas``: applyInPandas pays a per-GROUP Arrow
@@ -410,7 +368,7 @@ def doc_assemble_stage(elements_df, cfg: GenConfig,
     """
     out_cols = ["doc_id", "spans"] + (["confidence"] if with_confidence else [])
 
-    def assemble_doc(
+    def assemble_pages(
         doc_id: str, pages: list[tuple[int, Any, Any]]
     ) -> dict[str, Any]:
         pages.sort(key=lambda x: x[0])
@@ -421,24 +379,13 @@ def doc_assemble_stage(elements_df, cfg: GenConfig,
                 el["page_no"] = int(page_no)
                 children = el.get("children")
                 el["children"] = [] if children is None else [dict(c) for c in children]
-                el["cid"] = len(elements)
                 elements.append(el)
-        out = {
-            "doc_id": doc_id,
-            "spans": assemble_spans(
-                elements,
-                enable_merges=cfg.enable_merges,
-                process_list_markers=cfg.process_list_markers,
-                reading_order_mode=cfg.reading_order_mode,
-                enrich_formulas=cfg.enrich_formulas,
-            ),
-        }
-        if with_confidence:
-            from ..kernels.confidence import doc_confidence
-
-            out["confidence"] = doc_confidence(
-                [dict(pc) for _, _, pc in pages if pc is not None]
-            )
+        out = assemble_doc(
+            elements, cfg,
+            [dict(pc) for _, _, pc in pages if pc is not None]
+            if with_confidence else None,
+        )
+        out["doc_id"] = doc_id
         return out
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -460,7 +407,7 @@ def doc_assemble_stage(elements_df, cfg: GenConfig,
         n_docs = len(by_doc)
         chunk: list[dict[str, Any]] = []
         for doc_id in list(by_doc):
-            chunk.append(assemble_doc(doc_id, by_doc.pop(doc_id)))
+            chunk.append(assemble_pages(doc_id, by_doc.pop(doc_id)))
             if len(chunk) >= 256:
                 yield pd.DataFrame(chunk, columns=out_cols)
                 chunk = []

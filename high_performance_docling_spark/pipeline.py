@@ -174,7 +174,7 @@ def extract_spans(
     parsed = _checkpoint_stage(
         spark,
         docs_df,
-        lambda df: parse_stage(df, cfg, lineage_dir, with_detections=False),
+        lambda df: parse_stage(df, cfg, lineage_dir),
         os.path.join(checkpoint_dir, "parsed"),
         ["doc_id"],
     )

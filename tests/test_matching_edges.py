@@ -2,6 +2,8 @@
 (matching_post_processor.py ports: column dedup, cell moving, orphan
 banding with duplicate resolution, >300-cell bypass)."""
 
+import pytest
+
 from high_performance_docling_spark.kernels.table_match import (
     _deduplicate_columns,
     _find_alignment,
@@ -78,6 +80,15 @@ def test_column_dedup_drops_lower_scoring_adjacent():
     assert "7" in new_matches and all(
         m["table_cell_id"] != 1 for m in new_matches["7"]
     )
+
+
+def test_column_dedup_rejects_duplicate_cell_ids():
+    # one cell_id in two columns: the cell_id → column map would keep only
+    # the last, so the column scores would silently differ from :541-680
+    cells = [tcell(0, 0, 0, [0, 0, 10, 10]), tcell(0, 0, 1, [20, 0, 30, 10])]
+    iou = {"7": [{"table_cell_id": 0, "iopdf": 0.9}]}
+    with pytest.raises(ValueError, match="duplicate cell_id"):
+        _deduplicate_columns(2, cells, iou, {})
 
 
 def test_orphan_banding_assigns_row_and_column():

@@ -121,7 +121,15 @@ def test_arrow_model_stage_batches_across_record_batches(spark):
 
 
 def test_detect_stage_equals_inline_detection(spark):
-    from high_performance_docling_spark.corpus import GenConfig
+    """detect_stage (padded batches across Arrow batches) returns, page
+    for page, the detections the synth detector gives on the serially
+    typeset pages."""
+    from high_performance_docling_spark.corpus import (
+        GenConfig,
+        generate_corpus,
+        synth_detections,
+        typeset,
+    )
     from high_performance_docling_spark.operators.stages import (
         detect_stage,
         parse_stage,
@@ -130,12 +138,19 @@ def test_detect_stage_equals_inline_detection(spark):
 
     cfg = GenConfig(seed=7, n_docs=12)
     docs = docs_dataframe(spark, cfg, num_partitions=4)
-    inline = parse_stage(docs, cfg).collect()
-    staged = detect_stage(parse_stage(docs, cfg, with_detections=False), cfg).collect()
-    key = lambda r: (r["doc_id"], r["page_no"])  # noqa: E731
-    inline_map = {key(r): r["detections"] for r in inline}
-    staged_map = {key(r): r["detections"] for r in staged}
-    assert staged_map == inline_map and len(staged_map) > 0
+    staged = detect_stage(parse_stage(docs, cfg), cfg).collect()
+    staged_map = {
+        (r["doc_id"], r["page_no"]): [d.asDict() for d in r["detections"]]
+        for r in staged
+    }
+    serial_map = {}
+    for doc in generate_corpus(cfg):
+        spans = sorted(doc["spans"], key=lambda s: s["offset"])
+        for page in typeset(doc["doc_id"], spans, cfg):
+            serial_map[(doc["doc_id"], page.page_no)] = synth_detections(
+                doc["doc_id"], page, cfg
+            )
+    assert staged_map == serial_map and len(serial_map) > 0
 
 
 # ---------------------------------------------------------------------------
